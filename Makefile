@@ -4,7 +4,7 @@
 
 SF ?= /root/testdata/sf0.01
 
-.PHONY: test check-window check-proven check-all check-changed bench rotate-window ship-gate hooks
+.PHONY: test check-window check-proven check-all check-changed bench rotate-window ship-gate hooks perfbench-smoke
 
 # rewrite the generated graded-window block in registry.py from
 # tools/check_changed.py staleness output (never/strong leads,
@@ -47,3 +47,14 @@ check-all:
 
 bench:
 	python bench.py
+
+# the benchmark's self-tests (perfbench/README.md): two sf0.001 runs
+# must come back correct, and the run with one perturbed expected
+# result must report it ("correct": false)
+PERFBENCH_TINY = python3 perfbench/run.py --seed 1 --scale tiny
+perfbench_expect = python3 -c 'import json, sys; r = json.loads(sys.stdin.read().splitlines()[-1]); print("correct:", r["correct"], "failed:", r["failed"]); sys.exit(r["correct"] is not $(1))'
+
+perfbench-smoke:
+	$(PERFBENCH_TINY) --workload agent_session --seconds 3 --trace 0 | $(call perfbench_expect,True)
+	$(PERFBENCH_TINY) --workload pipeline_batch --seconds 1 --trace 1 | $(call perfbench_expect,True)
+	$(PERFBENCH_TINY) --workload agent_session --seconds 3 --trace 0 --corrupt-expected | $(call perfbench_expect,False)

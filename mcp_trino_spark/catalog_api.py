@@ -5,7 +5,9 @@ list_catalogs / list_schemas / list_tables / get_table_schema over the
 Spark catalog, with the reference's 1/2/3-part table-name resolution
 and allowlist gating.  These are driver-side metadata calls — no Spark
 jobs run, which is exactly the reference's "metadata scoping" cost
-model (docs/allowlists.md).
+model (docs/allowlists.md).  That rules out PySpark's
+``spark.catalog.list*`` helpers, which run one job per partition of
+their result; tests/test_metadata_jobs.py counts the jobs.
 """
 
 from __future__ import annotations
@@ -132,9 +134,6 @@ def get_table_schema(
 
 def _is_temp_view(spark: SparkSession, name: str) -> bool:
     try:
-        return spark.catalog.tableExists(name) and any(
-            t.name == name and t.tableType == "TEMPORARY"
-            for t in spark.catalog.listTables()
-        )
-    except Exception:  # noqa: BLE001
+        return spark.catalog.getTable(name).isTemporary
+    except Exception:  # noqa: BLE001 — unknown or unparsable name
         return False

@@ -476,14 +476,9 @@ def execute_query(
             # the schema for those (permanent tables keep the native
             # path, below)
             name = sct.group(1).strip("`")
-            try:
-                is_temp = any(
-                    t.name == name.split(".")[-1] and t.isTemporary
-                    for t in spark.catalog.listTables()
-                )
-            except Exception:
-                is_temp = False
-            if is_temp:
+            from mcp_trino_spark.catalog_api import _is_temp_view
+
+            if _is_temp_view(spark, name):
                 fields = ", ".join(
                     f"{f.name} {f.dataType.simpleString().upper()}"
                     for f in spark.table(name).schema.fields

@@ -179,16 +179,20 @@ def heavy_hitters_partial(
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
         # pdf rows are DISTINCT values with their exact in-shard counts
         # (the JVM aggregation below) — compress consumes them directly.
+        # The NULL value's row is dropped here, not before the JVM
+        # aggregation, so a key whose values are all NULL still emits
+        # an (empty) summary and keeps its output row.
+        vals = pdf[pdf["__hv"].notna()]
         # Same NUL guard as compress(): '<U' storage NUL-pads.
-        if len(pdf) and "\x00" not in "".join(pdf["__hv"]):
+        if len(vals) and "\x00" not in "".join(vals["__hv"]):
             counters, err = _compress_arrays(
-                pdf["__hv"].to_numpy(dtype=str),
-                pdf["__c"].to_numpy(dtype=np.int64),
+                vals["__hv"].to_numpy(dtype=str),
+                vals["__c"].to_numpy(dtype=np.int64),
                 cap,
             )
         else:
             counters, err = _compress_py(
-                {str(v): int(c) for v, c in zip(pdf["__hv"], pdf["__c"])},
+                {str(v): int(c) for v, c in zip(vals["__hv"], vals["__c"])},
                 cap,
             )
         row = {kc: pdf[kc].iloc[0] for kc in keys}
@@ -210,7 +214,6 @@ def heavy_hitters_partial(
     return (
         df.select(*keys, F.col(value_col).cast("string").alias("__hv"))
         .withColumn("__shard", F.pmod(F.spark_partition_id(), F.lit(n_shards)))
-        .filter(F.col("__hv").isNotNull())
         .groupBy(*keys, "__shard", "__hv")
         .agg(F.count("*").alias("__c"))
         .groupBy(*keys, "__shard")

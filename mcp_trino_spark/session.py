@@ -21,6 +21,18 @@ from pyspark.sql import SparkSession
 _DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
+def _default_driver_memory() -> str:
+    """24g, or half the machine's RAM when that is less: the JVM grows
+    its heap toward the maximum before collecting hard, so a maximum
+    above physical RAM gets the driver OOM-killed instead of
+    collected."""
+    try:
+        ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    except (ValueError, OSError):  # sysconf name unknown on this platform
+        return "24g"
+    return f"{min(24 * 1024, ram_mb // 2)}m"
+
+
 def get_spark(app_name: str = "mcp_trino_spark", cpus: str | None = None) -> SparkSession:
     """Build (or fetch) the resident SparkSession.
 
@@ -48,7 +60,10 @@ def get_spark(app_name: str = "mcp_trino_spark", cpus: str | None = None) -> Spa
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.cbo.enabled", "true")
         # events.parquet carries INT64 TIMESTAMP(NANOS) which Spark's

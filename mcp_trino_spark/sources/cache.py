@@ -124,9 +124,9 @@ def list_cached_tables(spark: SparkSession, config: EngineConfig) -> List[str]:
     """Names of currently-cached catalog tables/views (the memory
     'catalog' listing), allowlist-filtered like list_tables."""
     names = [
-        t.name
-        for t in spark.catalog.listTables()
-        if spark.catalog.isCached(t.name)
+        r.tableName
+        for r in spark.sql("SHOW TABLES").collect()
+        if spark.catalog.isCached(r.tableName)
     ]
     return [
         n

@@ -46,7 +46,7 @@ import re
 import shutil
 import uuid
 from datetime import datetime, timezone
-from typing import Dict, List, Optional, Tuple
+from typing import Dict, List, NamedTuple, Optional, Tuple
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -240,30 +240,65 @@ def vacuum_table_versions(spark: SparkSession, table: str, keep_last: int) -> in
 # copy-on-write commit
 
 
+class TableMeta(NamedTuple):
+    """What the DML and time-travel layers need to know about a table:
+    its data directory (None for temp views and other relations without
+    one) and its hive partition columns in partition order."""
+
+    location: Optional[str]
+    partition_columns: List[str]
+
+
+def table_metadata(spark: SparkSession, table: str) -> TableMeta:
+    """Location and partition columns of ``table`` from one ``DESCRIBE
+    FORMATTED``, a command that runs on the driver without a Spark job.
+    Resolved once per statement and passed down the call chain."""
+    # not spark.catalog.listColumns: its toLocalIterator runs one Spark job per partition
+    location, pcols, section = None, [], ""
+    for r in spark.sql(f"DESCRIBE FORMATTED {table}").collect():
+        name = r.col_name
+        if not name:  # blank row: end of a section
+            section = ""
+        elif name in ("# Partition Information", "# Detailed Table Information"):
+            section = name
+        elif section == "# Partition Information":
+            if name != "# col_name":  # the section's header row
+                pcols.append(name)
+        elif section == "# Detailed Table Information" and name.strip() == "Location":
+            location = r.data_type.strip().removeprefix("file:")
+    return TableMeta(location, pcols)
+
+
+def _file_table(spark: SparkSession, table: str) -> TableMeta:
+    """``table_metadata`` of a file-backed table; DmlError otherwise."""
+    meta = table_metadata(spark, table)
+    if meta.location is None:
+        raise DmlError(f"table {table!r} has no Location (not a file-backed table?)")
+    return meta
+
+
 def _table_location(spark: SparkSession, table: str) -> str:
     """Filesystem path of a (parquet) table's data directory."""
-    rows = spark.sql(f"DESCRIBE FORMATTED {table}").collect()
-    for r in rows:
-        if r.col_name.strip() == "Location":
-            loc = r.data_type.strip()
-            return loc.removeprefix("file:")
-    raise DmlError(f"table {table!r} has no Location (not a file-backed table?)")
+    return _file_table(spark, table).location
 
 
 def _commit(
-    spark: SparkSession, table: str, new_state: DataFrame, op: str = "dml"
+    spark: SparkSession,
+    table: str,
+    meta: TableMeta,
+    new_state: DataFrame,
+    op: str = "dml",
 ) -> None:
     """Write ``new_state`` once to a staging dir, then atomically swap it
     into the table location (rename + REFRESH).  The staging write runs
     the full Catalyst plan; the swap is metadata-only.  The replaced
     data moves into the version store (time travel) instead of being
     deleted — the snapshot costs no extra write."""
-    loc = _table_location(spark, table)
+    loc, pcols = meta
     with _table_commit_lock(loc):
         parent, base = os.path.dirname(loc), os.path.basename(loc)
         staged = os.path.join(parent, f".{base}.staged-{uuid.uuid4().hex[:8]}")
         retired = os.path.join(parent, f".{base}.retired-{uuid.uuid4().hex[:8]}")
-        pcols = _partition_columns(spark, table)
         writer = new_state.write
         if pcols:
             # preserve the hive layout — a flat write under a partitioned
@@ -304,14 +339,6 @@ def _commit(
 
 # ---------------------------------------------------------------------------
 # partition-bounded copy-on-write (hive-layout tables)
-
-
-def _partition_columns(spark: SparkSession, table: str) -> List[str]:
-    """Partition columns of ``table`` (catalog metadata), [] if none."""
-    try:
-        return [c.name for c in spark.catalog.listColumns(table) if c.isPartition]
-    except Exception:  # temp view or non-catalog relation → unpartitioned
-        return []
 
 
 # chars Spark's ExternalCatalogUtils.escapePathName percent-encodes in
@@ -358,8 +385,8 @@ def _partition_predicate(pcols: List[str], touched: List[Tuple]):
 def _commit_partitions(
     spark: SparkSession,
     table: str,
+    meta: TableMeta,
     new_touched_state: DataFrame,
-    pcols: List[str],
     touched: List[Tuple],
     op: str = "dml",
 ) -> None:
@@ -384,7 +411,7 @@ def _commit_partitions(
     (and of Hive's own rename protocol); deployments needing snapshot
     isolation across partitions want a log-based table format, whose
     plan-side shapes are identical to these."""
-    loc = _table_location(spark, table)
+    loc, pcols = meta
     with _table_commit_lock(loc):
         parent, base = os.path.dirname(loc), os.path.basename(loc)
         staged = os.path.join(parent, f".{base}.staged-{uuid.uuid4().hex[:8]}")
@@ -508,8 +535,8 @@ def update_table(
     rest of the table is untouched on disk.  Full-table rewrite remains
     the fallback for unpartitioned tables and for a SET that reassigns
     a partition column (rows can migrate between partitions)."""
-    loc = _table_location(spark, table)
-    with _table_commit_lock(loc):
+    meta = _file_table(spark, table)
+    with _table_commit_lock(meta.location):
         t = spark.table(table)
         set_clauses = _resolve_cols(t.columns, set_clauses, "UPDATE SET")
         cond = F.expr(where) if where else F.lit(True)
@@ -529,7 +556,7 @@ def update_table(
             )
 
         new_state = _updated(t)
-        pcols = _partition_columns(spark, table)
+        pcols = meta.partition_columns
         if pcols and not (set(pcols) & set(set_clauses)):
             # ONE aggregation job yields both the affected count and the
             # touched-partition set (|partitions| rows to the driver) — the
@@ -541,8 +568,9 @@ def update_table(
                 return 0  # nothing matched → nothing to rewrite at all
             touched = [tuple(r[c] for c in pcols) for r in per_part]
             _commit_partitions(
-                spark, table, new_state.filter(_partition_predicate(pcols, touched)),
-                pcols, touched, op="update",
+                spark, table, meta,
+                new_state.filter(_partition_predicate(pcols, touched)),
+                touched, op="update",
             )
             return affected
         # Fuse the affected-row count into the commit's staging write
@@ -557,7 +585,7 @@ def update_table(
         observed = t.observe(
             obs, F.sum(F.when(cond, 1).otherwise(0)).alias("affected")
         )
-        _commit(spark, table, _updated(observed), op="update")
+        _commit(spark, table, meta, _updated(observed), op="update")
         return int(obs.get["affected"] or 0)
 
 
@@ -565,8 +593,8 @@ def delete_from(spark: SparkSession, table: str, where: Optional[str]) -> int:
     """DELETE = inverted filter over the scan (narrow, no shuffle).
     Partition-bounded on hive-partitioned tables, like ``update_table``;
     a partition whose rows are all deleted has its directory retired."""
-    loc = _table_location(spark, table)
-    with _table_commit_lock(loc):
+    meta = _file_table(spark, table)
+    with _table_commit_lock(meta.location):
         t = spark.table(table)
         if where is None:
             cond = None
@@ -576,7 +604,7 @@ def delete_from(spark: SparkSession, table: str, where: Optional[str]) -> int:
             # keep rows where the predicate is false OR null (SQL DELETE
             # semantics: only true-matching rows are deleted)
             new_state = t.filter(~F.coalesce(cond.cast("boolean"), F.lit(False)))
-        pcols = _partition_columns(spark, table)
+        pcols = meta.partition_columns
         if pcols and cond is not None:
             # one job for count + touched partitions (see update_table)
             per_part = t.filter(cond).groupBy(*pcols).agg(F.count("*").alias("__n")).collect()
@@ -585,8 +613,9 @@ def delete_from(spark: SparkSession, table: str, where: Optional[str]) -> int:
                 return 0
             touched = [tuple(r[c] for c in pcols) for r in per_part]
             _commit_partitions(
-                spark, table, new_state.filter(_partition_predicate(pcols, touched)),
-                pcols, touched, op="delete",
+                spark, table, meta,
+                new_state.filter(_partition_predicate(pcols, touched)),
+                touched, op="delete",
             )
             return affected
         # NOT fused into the write (unlike update_table): DELETE's
@@ -597,7 +626,7 @@ def delete_from(spark: SparkSession, table: str, where: Optional[str]) -> int:
         # UPDATE's CASE projection has no such collapse, so only it
         # carries the one-pass protocol.
         affected = t.count() if cond is None else t.filter(cond).count()
-        _commit(spark, table, new_state, op="delete")
+        _commit(spark, table, meta, new_state, op="delete")
         return affected
 
 
@@ -627,17 +656,20 @@ def merge_into(
 
     Returns the number of rows updated+deleted+inserted.
     """
-    _lock_loc = _table_location(spark, target)
-    with _table_commit_lock(_lock_loc):
+    meta = _file_table(spark, target)
+    with _table_commit_lock(meta.location):
         if matched_update and matched_delete:
             raise DmlError("pass either matched_update or matched_delete, not both")
-        _target_cols = spark.table(target).columns
+        # analyze the target once: every output column below needs its type
+        target_df = spark.table(target)
+        target_schema = target_df.schema
+        target_cols = target_schema.names
         if matched_update:
-            matched_update = _resolve_cols(_target_cols, matched_update, "MERGE UPDATE SET")
+            matched_update = _resolve_cols(target_cols, matched_update, "MERGE UPDATE SET")
         if insert_values:
-            insert_values = _resolve_cols(_target_cols, insert_values, "MERGE INSERT")
+            insert_values = _resolve_cols(target_cols, insert_values, "MERGE INSERT")
         t = (
-            spark.table(target)
+            target_df
             .withColumn("__t_rowid", F.monotonically_increasing_id())
             .withColumn("__t_exists", F.lit(True))
             .alias(target_alias)
@@ -675,7 +707,6 @@ def merge_into(
                     "MERGE: a target row matches multiple source rows"
                 )
 
-        target_cols = [c for c in spark.table(target).columns]
         if insert_all:
             insert_values = {c: f"{source_alias}.{c}" for c in target_cols}
 
@@ -684,15 +715,13 @@ def merge_into(
             keep = F.col(f"{target_alias}.{c}")
             col = keep
             if matched_update and c in matched_update:
-                col = F.when(acted, F.expr(matched_update[c]).cast(
-                    spark.table(target).schema[c].dataType
-                )).otherwise(keep)
+                col = F.when(
+                    acted, F.expr(matched_update[c]).cast(target_schema[c].dataType)
+                ).otherwise(keep)
             if insert_values is not None:
                 ins = (
-                    F.expr(insert_values[c]).cast(spark.table(target).schema[c].dataType)
-                    if c in insert_values
-                    else F.lit(None).cast(spark.table(target).schema[c].dataType)
-                )
+                    F.expr(insert_values[c]) if c in insert_values else F.lit(None)
+                ).cast(target_schema[c].dataType)
                 col = F.when(source_only, ins).otherwise(col)
             out_cols.append(col.alias(c))
 
@@ -710,7 +739,7 @@ def merge_into(
             n_inserted = (
                 joined.filter(source_only).count() if insert_values is not None else 0
             )
-            pcols = _partition_columns(spark, target)
+            pcols = meta.partition_columns
             part_reassigned = bool(matched_update and set(pcols) & set(matched_update))
             if pcols and not part_reassigned:
                 # partition-bounded MERGE: touched = partitions holding acted
@@ -741,13 +770,13 @@ def merge_into(
                 _commit_partitions(
                     spark,
                     target,
+                    meta,
                     new_state.filter(_partition_predicate(pcols, touched_list)),
-                    pcols,
                     touched_list,
                     op="merge",
                 )
             else:
-                _commit(spark, target, new_state, op="merge")
+                _commit(spark, target, meta, new_state, op="merge")
         finally:
             joined.unpersist()
         return n_matched + n_inserted
@@ -1067,10 +1096,10 @@ def zorder_table(
     benched as the s13b headliner."""
     from mcp_trino_spark.sources.layout import zorder_frame
 
-    loc = _table_location(spark, table)
+    meta = _file_table(spark, table)
+    loc, pcols = meta
     with _table_commit_lock(loc):
         t = spark.table(table)
-        pcols = _partition_columns(spark, table)
         missing = [c for c in zorder_by if c not in t.columns]
         if missing:
             raise DmlError(f"zorder_by columns not in table: {missing}")
@@ -1097,7 +1126,7 @@ def zorder_table(
         except ValueError as e:
             raise DmlError(str(e)) from e
         rows = t.count()
-        _commit(spark, table, clustered, op="optimize")
+        _commit(spark, table, meta, clustered, op="optimize")
         return rows
 
 
@@ -1118,12 +1147,11 @@ def optimize_table(
     copy-on-write commit: time travel still reads the pre-compaction
     state, and the data content is unchanged (asserted by tests and the
     fact that the staged plan is a pure re-read of the live table)."""
-    _lock_loc = _table_location(spark, table)
-    with _table_commit_lock(_lock_loc):
+    meta = _file_table(spark, table)
+    loc, pcols = meta
+    with _table_commit_lock(loc):
         threshold = int(file_size_threshold_mb * 1024 * 1024)
-        loc = _table_location(spark, table)
         t = spark.table(table)
-        pcols = _partition_columns(spark, table)
 
         if not pcols:
             files = _parquet_files(loc)
@@ -1132,7 +1160,7 @@ def optimize_table(
             total = sum(os.path.getsize(f) for f in files)
             n_out = max(1, -(-total // threshold))  # ceil
             rows = t.count()
-            _commit(spark, table, t.repartition(int(n_out)), op=op)
+            _commit(spark, table, meta, t.repartition(int(n_out)), op=op)
             return rows
 
         touched: List[Tuple] = []
@@ -1180,8 +1208,9 @@ def optimize_table(
         rows = t.filter(pred).count()
         # one task (→ one output file) per touched partition
         _commit_partitions(
-            spark, table, t.filter(pred).repartition(*[F.col(c) for c in pcols]),
-            pcols, touched, op=op,
+            spark, table, meta,
+            t.filter(pred).repartition(*[F.col(c) for c in pcols]),
+            touched, op=op,
         )
         return rows
 

@@ -114,7 +114,7 @@ def loaded_catalogs(spark: SparkSession) -> List[str]:
     — Spark only lists a plugin catalog after first use, but a user
     asking "what catalogs exist" wants the configured set (the
     reference's SHOW CATALOGS returns all configured connectors)."""
-    names = {c.name for c in spark.catalog.listCatalogs()}
+    names = {r.catalog for r in spark.sql("SHOW CATALOGS").collect()}
     # SET (no args) lists every explicitly-set SQL conf, including
     # runtime-registered spark.sql.catalog.<name> plugin bindings
     for row in spark.sql("SET").collect():

@@ -53,8 +53,9 @@ _MAX_PRUNE_PARTITIONS = 1000
 
 from mcp_trino_spark.sources.dml import (
     DmlError,
+    TableMeta,
+    _file_table,
     _load_history,
-    _partition_columns,
     _store_root,
     _table_location,
     current_table_version,
@@ -106,7 +107,9 @@ def _live_partition_rels(loc: str, n_levels: int) -> List[str]:
     return rels
 
 
-def version_at_timestamp(spark: SparkSession, table: str, ts: str) -> int:
+def version_at_timestamp(
+    spark: SparkSession, table: str, ts: str, meta: Optional[TableMeta] = None
+) -> int:
     """Version that was live at ``ts`` (ISO-8601, UTC assumed when
     offset-less): the newest commit with commit-ts ≤ ts; 0 when every
     commit is later (Trino's ``FOR TIMESTAMP AS OF`` resolution rule).
@@ -119,7 +122,7 @@ def version_at_timestamp(spark: SparkSession, table: str, ts: str) -> int:
     t = datetime.fromisoformat(ts)
     if t.tzinfo is None:
         t = t.replace(tzinfo=timezone.utc)
-    loc = _table_location(spark, table)
+    loc = (meta or _file_table(spark, table)).location
     v = 0
     for c in _load_history(loc)["commits"]:
         if datetime.fromisoformat(c["ts"]) <= t:
@@ -127,11 +130,14 @@ def version_at_timestamp(spark: SparkSession, table: str, ts: str) -> int:
     return v
 
 
-def read_table_version(spark: SparkSession, table: str, version: int) -> DataFrame:
+def read_table_version(
+    spark: SparkSession, table: str, version: int, meta: Optional[TableMeta] = None
+) -> DataFrame:
     """DataFrame of ``table`` as of DML ``version`` (0 = the state
     before the first DML commit; the current version is
-    ``current_table_version``)."""
-    loc = _table_location(spark, table)
+    ``current_table_version``).  ``meta`` is the statement's
+    ``table_metadata``, looked up here when not given."""
+    loc, pcols = meta or _file_table(spark, table)
     hist = _load_history(loc)
     cur = current_table_version(loc)
     if version > cur or version < 0:
@@ -147,7 +153,6 @@ def read_table_version(spark: SparkSession, table: str, version: int) -> DataFra
     store = _store_root(loc)
     after = [c for c in hist["commits"] if c["version"] > version]
     appends_after = [c for c in after if c["kind"] == "append"]
-    pcols = _partition_columns(spark, table)
 
     schema = spark.table(table).schema
     if not pcols:
@@ -166,9 +171,8 @@ def read_table_version(spark: SparkSession, table: str, version: int) -> DataFra
             if a["version"] < cutoff
             for f in a["added"]
         }
-        return _exclude_files(
-            _read_dir(spark, schema, root, {}, pcols), excluded
-        )
+        # the catalog schema is the files' schema: no inference job
+        return _exclude_files(spark.read.schema(schema).parquet(root), excluded)
 
     # candidate partitions = live dirs ∪ every rel any later commit knows
     rels = set(_live_partition_rels(loc, len(pcols)))
@@ -275,24 +279,6 @@ def _resolve_partition_dir(
     return (d, float("inf")) if os.path.isdir(d) else (None, None)
 
 
-def _read_dir(
-    spark: SparkSession,
-    schema,
-    d: str,
-    pvalues: Dict[str, Optional[str]],
-    pcols: List[str],
-) -> DataFrame:
-    """Read one data directory and re-inject partition values (files in
-    hive layout do not store partition columns), aligned to the table's
-    schema and column order."""
-    df = spark.read.parquet(d)
-    for c in pcols:
-        v = pvalues.get(c)
-        col = F.lit(v).cast(schema[c].dataType)
-        df = df.withColumn(c, col)
-    return df.select(*[f.name for f in schema.fields])
-
-
 # ---------------------------------------------------------------------------
 # SQL front door: `... FROM <table> FOR VERSION AS OF <n> ...`
 
@@ -329,13 +315,14 @@ def rewrite_version_as_of(
             if not mask[m.start()]:
                 continue
             table = m.group(1)
-            version = to_version(table, m.group(2))
+            meta = _file_table(spark, table)
+            version = to_version(table, m.group(2), meta)
             # uuid suffix: a deterministic session-global name would
             # race between concurrent queries (one finally-drop deleting
             # the view the other is analyzing) — same convention as
             # execute.py's __mr_/__stats_ views
             view = f"{table.replace('.', '_')}__v{version}_{uuid.uuid4().hex[:8]}"
-            read_table_version(spark, table, version).createOrReplaceTempView(view)
+            read_table_version(spark, table, version, meta).createOrReplaceTempView(view)
             if created_views is not None:
                 created_views.append(view)
             out.append(q[last : m.start()])
@@ -349,8 +336,12 @@ def rewrite_version_as_of(
     # leave `FOR TIMESTAMP AS OF` untouched inside an already-spliced
     # string only if both named the same table — order just keeps the
     # two passes independent
-    q = sub(_TIMESTAMP_AS_OF, lambda t, ts: version_at_timestamp(spark, t, ts), q)
-    q = sub(_VERSION_AS_OF, lambda t, v: int(v), q)
+    q = sub(
+        _TIMESTAMP_AS_OF,
+        lambda t, ts, meta: version_at_timestamp(spark, t, ts, meta),
+        q,
+    )
+    q = sub(_VERSION_AS_OF, lambda t, v, meta: int(v), q)
     mask = _code_mask(q)
     leftover = [
         m
@@ -415,14 +406,14 @@ def table_changes(
             f"table_changes: from_version {from_version} > to_version "
             f"{to_version}"
         )
-    old = read_table_version(spark, table, from_version)
-    new = read_table_version(spark, table, to_version)
+    meta = _file_table(spark, table)
+    old = read_table_version(spark, table, from_version, meta)
+    new = read_table_version(spark, table, to_version, meta)
     if from_version == to_version:
         empty = new.filter(F.lit(False))
         return empty.withColumn("_change_type", F.lit("insert"))
 
-    loc = _table_location(spark, table)
-    pcols = _partition_columns(spark, table)
+    loc, pcols = meta
     hist = _load_history(loc)
     in_range = [
         c for c in hist["commits"] if from_version < c["version"] <= to_version

@@ -4785,7 +4785,9 @@ def _rewrite_approx_most_frequent(query: str) -> str:
     the DataFrame-level ``heavy_hitters_by`` / ``a22`` entry); the
     exact plan is preferred until that cardinality wall because it
     shares one shuffle with ordinary aggregation.  NULL values are ignored (aggregate-function
-    semantics; Spark map keys cannot be NULL).
+    semantics; Spark map keys cannot be NULL), but a group whose values
+    are all NULL keeps its row, with an empty map — the GROUP BY
+    cardinality, as the grand aggregate and the sketch route give it.
 
     Supported shape: one approx_most_frequent call, top-level select
     list, no other aggregate in the list, simple body (no HAVING /
@@ -4800,25 +4802,31 @@ def _rewrite_approx_most_frequent(query: str) -> str:
 
     map_expr = (
         "map_from_entries(transform(array_sort(collect_list("
-        "struct(-__amf_cnt AS __n, __amf_val AS __v, __amf_cnt AS __c))), "
+        "struct(-__amf_cnt AS __n, __amf_val AS __v, __amf_cnt AS __c)) "
+        "FILTER (WHERE __amf_val IS NOT NULL)), "
         "__e -> struct(__e.__v, __e.__c)))"
-    )
-    counts = (
-        f"SELECT {keys + ', ' if keys else ''}{value} AS __amf_val, "
-        f"COUNT(*) AS __amf_cnt FROM {tail} "
-        f"GROUP BY {keys + ', ' if keys else ''}{value} "
-        f"HAVING {value} IS NOT NULL"
     )
     out_keys = ", ".join(others) + ", " if others else ""
     if keys:
+        # the NULL value's count row stays, ranked last, so an all-NULL
+        # group still reaches the final GROUP BY; the FILTER drops it
+        # from the map
+        counts = (
+            f"SELECT {keys}, {value} AS __amf_val, COUNT(*) AS __amf_cnt "
+            f"FROM {tail} GROUP BY {keys}, {value}"
+        )
         return (
             f"SELECT {out_keys}{map_expr} AS {alias} FROM ("
             f"SELECT *, ROW_NUMBER() OVER (PARTITION BY {keys} "
-            f"ORDER BY __amf_cnt DESC, __amf_val ASC) AS __amf_rk "
-            f"FROM ({counts}) __amf_c"
+            f"ORDER BY __amf_val IS NULL, __amf_cnt DESC, __amf_val ASC) "
+            f"AS __amf_rk FROM ({counts}) __amf_c"
             f") __amf_r WHERE __amf_rk <= {buckets} "
             f"GROUP BY {keys}{order_tail}"
         )
+    counts = (
+        f"SELECT {value} AS __amf_val, COUNT(*) AS __amf_cnt FROM {tail} "
+        f"GROUP BY {value} HAVING {value} IS NOT NULL"
+    )
     return (
         f"SELECT {map_expr} AS {alias} FROM ("
         f"SELECT * FROM ({counts}) __amf_c "

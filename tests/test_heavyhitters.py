@@ -321,3 +321,31 @@ def test_vectorized_compress_tie_and_unicode_order():
     counts.update({f"f{i}": 3 for i in range(70)})  # past the ndarray gate
     for cap in (2, 5, 7, 100):
         assert compress(counts, cap) == _compress_py(counts, cap)
+
+
+def test_all_null_group_keeps_its_row(spark):
+    """A key whose values are all NULL keeps its output row, with an
+    empty summary: both approx_most_frequent routes return the GROUP BY
+    cardinality and keys (NULL values never count)."""
+    from mcp_trino_spark.execute import execute_query
+    from mcp_trino_spark.trino_compat import set_approx_most_frequent_mode
+
+    rows = [(1, "a"), (1, "a"), (1, "b"), (1, None), (2, None), (2, None), (3, None)]
+    df = spark.createDataFrame(rows, "g int, v string").repartition(3)
+    summaries = {r.g: r for r in heavy_hitters_by(df, "v", ["g"], capacity=4).collect()}
+    assert set(summaries) == {1, 2, 3}
+    assert (summaries[2].hh_vals, summaries[2].hh_counts, summaries[2].hh_err) == ([], [], 0)
+
+    df.createOrReplaceTempView("amf_nulls")
+    q = "SELECT g, approx_most_frequent(2, v, 10) AS hh FROM amf_nulls GROUP BY g"
+    out = {}
+    try:
+        for mode in ("exact", "sketch"):
+            set_approx_most_frequent_mode(mode)
+            res = execute_query(spark, q, dialect="trino")
+            out[mode] = sorted((r["g"], r["hh"]) for r in res.rows)
+    finally:
+        set_approx_most_frequent_mode(None)  # clear the explicit session knob
+        spark.catalog.dropTempView("amf_nulls")
+    assert out["sketch"] == out["exact"]
+    assert out["exact"] == [(1, {"a": 2, "b": 1}), (2, {}), (3, {})]
