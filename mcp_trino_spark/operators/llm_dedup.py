@@ -164,56 +164,6 @@ def minhash_signatures_plan(docs):
     )
 
 
-def _minhash_signatures_arrow(docs):
-    """A/B twin of ``minhash_signatures_plan`` (VERDICT r15 #5): the
-    16-lane signature computed per doc inside ``mapInPandas`` —
-    hashlib md5 over each shingle×variant, numpy min over the four
-    big-endian uint32 windows per digest, '%08x' back to the hex-lane
-    contract.  Bit-identical to the JVM plan: fixed-width lowercase
-    hex compares like the uint32 it encodes, so numeric min selects
-    the same lane values MIN(substr(md5hex, k, 8)) does.  NULL text →
-    all-NULL lanes, NULL-propagating like the JVM concat."""
-    import numpy as np
-    import pandas as pd
-
-    schema = "doc_id long, " + ", ".join(
-        f"h{h} string" for h in range(NUM_BANDS * ROWS_PER_BAND)
-    )
-    tags = [f"#{j}".encode() for j in range(_N_MD5)]
-    n_lanes = NUM_BANDS * ROWS_PER_BAND
-
-    def sigs(it):
-        from hashlib import md5
-
-        for pdf in it:
-            out = {"doc_id": pdf["doc_id"].to_numpy()}
-            lanes: list = [[] for _ in range(n_lanes)]
-            for text in pdf["text"]:
-                if text is None:
-                    for lane in lanes:
-                        lane.append(None)
-                    continue
-                n = max(len(text) - (SHINGLE_LEN - 1), 1)
-                enc = [text[i : i + SHINGLE_LEN].encode() for i in range(n)]
-                blob = b"".join(
-                    md5(s + t).digest() for s in enc for t in tags
-                )
-                # (n shingles, 4 md5 variants, 4 uint32 windows) → min
-                # per (variant, window) over shingles
-                mins = (
-                    np.frombuffer(blob, dtype=">u4")
-                    .reshape(n, _N_MD5, 4)
-                    .min(axis=0)
-                )
-                for h, j, start in _mh_windows():
-                    lanes[h].append(f"{mins[j, (start - 1) // 8]:08x}")
-            for h in range(n_lanes):
-                out[f"h{h}"] = pd.Series(lanes[h], dtype=object)
-            yield pd.DataFrame(out)
-
-    return docs.select("doc_id", "text").mapInPandas(sigs, schema)
-
-
 def minhash_lsh_pairs_plan(docs):
     """The l2 plan over an arbitrary documents frame (doc_id, text) —
     parameterized so tools/scaling_check.py can drive it at synthetic

@@ -1145,29 +1145,29 @@ def l35b_quality_percentile_scaled(spark, sf_dir):
     handling does not apply to windows), so a 10 TB source OOMs the
     task.  This form computes the identical exact percent_rank with no
     unsplittable stage, the classic range-partition + offset
-    composition:
+    composition (``windows.range_rank``, shared with w3/w3b/w4):
 
     1. ``repartitionByRange(P, source, diversity, doc_id)`` — the range
        partitioner splits each source across many partitions in sort
        order; P scales with the cluster, so partition sizes stay
        bounded at 100 TB.
-    2. A tiny per-(partition, source) count aggregate (≤ P × sources
-       rows) yields, per partition, the number of same-source rows in
-       all EARLIER partitions (the rank offset) and the source total n.
-       The cumulative window here is over the aggregate frame only —
-       kilobytes — never over row data.
-    3. Broadcast the offsets back; within each range partition a
-       row_number window partitioned by (partition-id, source) — each
-       such window partition is bounded by the range-partition size,
-       splittable by raising P — composes with the offset into the
-       exact global rank, and pr = (rank-1)/(n-1) in the same IEEE
-       double arithmetic percent_rank uses, so the 0.8 cut keeps
+    2. One driver collect of a per-(partition, source) aggregate —
+       count, min and max of the persisted monotonically_increasing_id
+       — at most P × sources rows (640 for 20 sources at P = 32).  The
+       driver turns it into each slice's rank offset (same-source rows
+       in all EARLIER partitions) and the source total n, and checks
+       the ids of every slice are consecutive.
+    3. Broadcast (partition, source, shift, n) back on a null-safe key
+       (a NULL source is ranked as its own group, as PARTITION BY
+       does); rank = id + shift, and pr = (rank-1)/(n-1) in the same
+       IEEE double arithmetic percent_rank uses, so the 0.8 cut keeps
        byte-identical rows on both engines.
 
-    The range exchange feeds both the count aggregate and the join
-    side as an identical subplan, so Spark's ReuseExchange shares one
-    physical shuffle (plan-guarded in tests/test_plans.py) — the
-    partition-id → offset mapping is consistent by construction.
+    The persisted range-partitioned frame feeds both the aggregate and
+    the ranking, so the corpus is shuffled once and the partition-id →
+    offset mapping is consistent by construction; no window and no
+    hash exchange touches row data (plan-guarded in
+    tests/test_plans.py).
 
     An alternative scale path (documented in SCALE.md) is the two-pass
     broadcast-threshold: per-source counts + binary-search selection of
@@ -1187,62 +1187,18 @@ def l35b_quality_percentile_scaled(spark, sf_dir):
 
 def quality_percentile_scaled_plan(docs):
     """The distributed-ranking engine shared by l35b and the 10x probe
-    in tools/scaling_check.py.  ``docs`` needs (doc_id, source, text)."""
-    from pyspark.sql import Window
+    in tools/scaling_check.py.  ``docs`` needs (doc_id, source, text).
+    Runs the slice-count job of ``range_rank`` at construction."""
+    from mcp_trino_spark.operators.windows import range_rank
 
-    from mcp_trino_spark.operators.opcache import persist_tracked
-
-    spark = docs.sparkSession
     ws = F.split(F.lower("text"), " ")
     diversity = F.size(F.array_distinct(ws)).cast("double") / F.size(ws)
     scored = docs.select("doc_id", "source", diversity.alias("diversity"))
-
-    nparts = max(spark.sparkContext.defaultParallelism, 8)
-    # Sort within the range partitions and stamp each row's partition-
-    # local POSITION via monotonically_increasing_id, frozen by the
-    # persist (r16, guide §2.4 — the w3b treatment): the old
-    # row_number() window over (pid, source) required
-    # hashpartitioning(pid, source), which Catalyst cannot recognize
-    # the range partitioning as satisfying, so the whole scored frame
-    # was shuffled a SECOND time.  Same-source rows are contiguous in
-    # the partition sort, so their mids are consecutive and local rank
-    # = mid − min(mid over the (pid, source) group) + 1 — the group
-    # minimum rides the counts aggregate that already feeds the
-    # broadcast offsets.  (mid = pid<<33 | position: position field
-    # overflows only past 2^33 rows in ONE range partition —
-    # unreachable with sane nparts at any target scale.)
-    ranged = persist_tracked(
-        scored.repartitionByRange(nparts, "source", "diversity", "doc_id")
-        .sortWithinPartitions("source", "diversity", "doc_id")
-        .withColumn("pid", F.spark_partition_id())
-        .withColumn("__mid", F.monotonically_increasing_id())
-    )
-
-    # Tiny frame: one row per (range partition, source).  The windows
-    # below run over THIS aggregate (≤ P × |sources| rows), not row data.
-    counts = ranged.groupBy("pid", "source").agg(
-        F.count("*").alias("c"), F.min("__mid").alias("base")
-    )
-    w_off = (
-        Window.partitionBy("source")
-        .orderBy("pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = counts.select(
-        "pid",
-        "source",
-        "base",
-        F.coalesce(F.sum("c").over(w_off), F.lit(0)).alias("offset"),
-        F.sum("c").over(Window.partitionBy("source")).alias("n"),
-    )
-
-    joined = ranged.join(F.broadcast(offsets), ["pid", "source"])
-    ranked = joined.withColumn(
-        "rank", F.col("offset") + (F.col("__mid") - F.col("base")) + F.lit(1)
-    )
+    nparts = max(docs.sparkSession.sparkContext.defaultParallelism, 8)
+    ranked, _ = range_rank(scored, ["diversity", "doc_id"], ["source"], nparts)
     # percent_rank semantics: (rank-1)/(n-1), defined as 0 for n == 1.
     pr = F.when(F.col("n") == 1, F.lit(0.0)).otherwise(
-        (F.col("rank") - F.lit(1)).cast("double")
+        (F.col("rn") - F.lit(1)).cast("double")
         / (F.col("n") - F.lit(1)).cast("double")
     )
     return (

@@ -13,6 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import Window, functions as F
 
+from mcp_trino_spark.operators import opcache
 from mcp_trino_spark.operators._util import T
 from mcp_trino_spark.registry import register
 
@@ -56,90 +57,81 @@ def w2_rank_dense_rank(spark, sf_dir):
     )
 
 
-def _global_rank(spark, df, order_cols):
-    """Distributed global row_number over a total order — the 100 TB
-    form of an unpartitioned ranking window.
+def range_rank(df, order_cols, group_cols=(), nparts=None):
+    """Distributed row_number per ``group_cols`` (the whole frame when
+    empty) over ``order_cols`` — the 100 TB form of a ranking window,
+    shared by w3/w3b/w4 and l35b.  A window funnels each of its
+    partitions (unpartitioned: the whole table) through ONE task, and
+    AQE does not split windows; this plan never does:
 
-    An unpartitioned window funnels the whole table through ONE task.
-    The scalable plan: range-repartition on the sort key, rank locally
-    per partition, then add per-partition row-count prefix offsets
-    (metadata-sized driver collect: one count per partition).  Global
-    rank = local rank + offset; NTILE/percent_rank/cume_dist follow
-    closed-form from (rank, total).  No stage touches more than one
-    partition of data, and the only global coordination is the N-row
-    count exchange.
+    1. ``repartitionByRange(nparts, *groups, *order)`` and sort within
+       partitions, so a big group spreads over many bounded partitions.
+    2. Stamp ``__pid`` and ``__mid`` (monotonically_increasing_id above
+       the sort) and persist via ``opcache.persist_tracked``: range
+       bounds are SAMPLED per job, so the collect and the ranking must
+       read one materialization.
+    3. Collect count/min/max of ``__mid`` per (pid, *groups) slice — at
+       most nparts × groups rows.
+    4. On the driver, a slice's offset is its group's row count in
+       earlier partitions.
+    5. Broadcast (pid, *groups, n, shift) back on a null-safe key (a
+       NULL group ranks as its own group, as PARTITION BY does) and
+       ``rn = __mid + shift`` — no Window node, no second exchange.
 
-    ``order_cols`` must be a TOTAL order (include a unique tiebreak) so
-    range boundaries are unambiguous and rank functions defined on
-    peer groups degenerate to row-number formulas exactly.
+    Position is ``__mid − min(__mid)`` in the slice.  Spark documents
+    monotonically_increasing_id as increasing and unique, not as
+    consecutive, so ``max − min + 1 == count`` is checked on the
+    collected rows and a gap raises rather than returning wrong ranks.
 
-    Returns ``(ranked_df, total)`` where ranked_df = df's columns + a
-    global 1-based ``rn``.  The returned frame is persisted (range
-    boundaries are SAMPLED per job, so the counts job and the ranking
-    job must share one materialization; at 100 TB: write the
-    repartitioned table, then rank from it).  Lifecycle: the registry
-    callers (w3/w3b/w4) return lazy DataFrames, so they cannot
-    unpersist before execution — every harness (check_correctness,
-    bench, driver) clears the cache between entries instead; a library
-    caller embedding this in a long-lived session should
-    ``spark.catalog.clearCache()`` or unpersist after materializing.
-    """
-    n_parts = spark.sparkContext.defaultParallelism
-    # Sort within the range partitions and stamp each row's partition-
-    # local POSITION via monotonically_increasing_id (r16, guide §2.4):
-    # mid = (partition id << 33) | row position, evaluated above the
-    # sort and frozen by the persist, so local rank = mid − (pid << 33)
-    # — no Window node at all.  The old row_number() Window required
-    # hashpartitioning(pid), which the planner cannot recognize the
-    # range partitioning as satisfying (pid IS the partition, but that
-    # fact is invisible to Catalyst), so the whole table was shuffled a
-    # SECOND time before ranking; this shape keeps the single range
-    # exchange (plans/r16/w3b_*: 2 data exchanges + Window → 1 + none).
-    part = (
-        df.repartitionByRange(n_parts, *order_cols)
-        .sortWithinPartitions(*order_cols)
-        .withColumn("pid", F.spark_partition_id())
+    ``order_cols`` must be a TOTAL order within a group (unique
+    tiebreak), so NTILE/percent_rank/cume_dist are closed forms of
+    (rn, n).  Returns ``(ranked, sizes)``: df's columns + 1-based
+    ``rn`` + the group's row count ``n``, and {group-key tuple (``()``
+    ungrouped): row count}.  ``ranked`` reads the persisted frame:
+    harnesses clear the cache between entries, the server releases it
+    through opcache after each call."""
+    keys = [*group_cols, *order_cols]
+    spark = df.sparkSession
+    nparts = nparts or spark.sparkContext.defaultParallelism
+    part = opcache.persist_tracked(
+        df.repartitionByRange(nparts, *keys)
+        .sortWithinPartitions(*keys)
+        .withColumn("__pid", F.spark_partition_id())
         .withColumn("__mid", F.monotonically_increasing_id())
     )
-    from mcp_trino_spark.operators.opcache import persist_tracked
+    slices = part.groupBy("__pid", *group_cols).agg(
+        F.count("*").alias("n"),
+        F.min("__mid").alias("__shift"),
+        F.max("__mid").alias("__hi"),
+    )
+    sizes, shifts = {}, []
+    for pid, *gkey, cnt, lo, hi in sorted(slices.collect(), key=lambda r: r[0]):
+        if hi - lo + 1 != cnt:
+            raise RuntimeError(
+                f"range_rank: partition {pid} holds {cnt} rows but ids "
+                f"{lo}..{hi} — monotonically_increasing_id is not consecutive"
+            )
+        gkey = tuple(gkey)
+        shifts.append((pid, gkey, sizes.get(gkey, 0) + 1 - lo))
+        sizes[gkey] = sizes.get(gkey, 0) + cnt
+    off = spark.createDataFrame(
+        [(pid, *gkey, sizes[gkey], shift) for pid, gkey, shift in shifts],
+        slices.drop("__hi").schema,
+    )
+    on = [part["__pid"] == off["__pid"]]
+    on += [part[g].eqNullSafe(off[g]) for g in group_cols]
+    ranked = part.join(F.broadcast(off), on).select(
+        *(part[c] for c in df.columns),
+        (part["__mid"] + off["__shift"]).alias("rn"),
+        off["n"],
+    )
+    return ranked, sizes
 
-    part = persist_tracked(part)
-    counts = {
-        r["pid"]: r["cnt"]
-        for r in part.groupBy("pid").agg(F.count("*").alias("cnt")).collect()
-    }
-    if counts and max(counts.values()) >= (1 << 33):
-        # mid's per-partition position field is 33 bits; a partition
-        # beyond 8.6B rows would wrap into the partition-id bits.
-        # Unreachable with sane n_parts at any target scale — loud
-        # guard rather than silent corruption.
-        raise RuntimeError(
-            "global rank: a range partition exceeds 2^33 rows; "
-            "raise the partition count"
-        )
-    total = sum(counts.values())
-    offsets, acc = {}, 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    off_df = F.broadcast(
-        spark.createDataFrame(
-            [(pid, off) for pid, off in offsets.items()] or [(0, 0)],
-            "pid INT, off BIGINT",
-        )
-    )
-    ranked = (
-        part.join(off_df, "pid")
-        .withColumn(
-            "rn",
-            F.col("__mid")
-            - F.col("pid").cast("long") * F.lit(1 << 33)
-            + F.lit(1)
-            + F.col("off"),
-        )
-        .drop("pid", "off", "__mid")
-    )
-    return ranked, total
+
+def _global_rank(spark, df, order_cols):
+    """``(ranked, total)``: range_rank over the whole frame."""
+    ranked, sizes = range_rank(df, order_cols)
+    return ranked, sizes.get((), 0)
 
 
 def _ntile_expr(n, total):

@@ -129,7 +129,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 #: session → {(sql_text, sf_dir, table fingerprints): DataFrame} — the
 #: r16 ANALYZED-PLAN cache for translate-routed SQL entries (VERDICT
 #: r15 #1).  Catalyst analysis of the big UNION batches costs
-#: 0.3–0.5 s per entry per call (measured, tools/r16_probe.py xtax);
+#: 0.3–0.5 s per entry per call (measured, OPTIMIZATION_r16.md);
 #: the analyzed DataFrame is an immutable logical plan, so reusing it
 #: is compilation reuse only — every action still scans parquet.
 #:

@@ -8999,13 +8999,6 @@ def _elem_shape_of(types: dict, *exprs: str):
     return s[1] if s else None
 
 
-def _vshape_of(types: dict, *exprs: str):
-    """Merged value shape across every operand knowable as a map
-    (ordering/float-detection paths only — see _elem_shape_of)."""
-    s = _merged_shape_of(types, "map", exprs)
-    return s[1] if s else None
-
-
 def _field_shapes_of(types: dict, *exprs: str):
     """Merged per-field shapes across every operand knowable as a row
     (ordering paths only — see _elem_shape_of)."""

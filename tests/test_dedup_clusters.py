@@ -151,25 +151,6 @@ def test_substring_dedup_finds_verbatim_span(spark):
     assert substring_dedup_plan(at_cap).count() == n * (n - 1) // 2
 
 
-def test_arrow_signature_kernel_bit_identical(spark):
-    """The r16 A/B twin (_minhash_signatures_arrow) must stay
-    bit-identical to the JVM signature plan — it documents the
-    measured-and-rejected mapInPandas variant (end-to-end l2 min-of-N
-    favored the codegen plan; see OPTIMIZATION_r16.md) and keeps the
-    door open for re-evaluation at real scale."""
-    from mcp_trino_spark.operators._util import spread
-    from mcp_trino_spark.operators.llm_dedup import (
-        _minhash_signatures_arrow,
-        minhash_signatures_plan,
-    )
-    from mcp_trino_spark.sources.catalog import load_table
-
-    docs = spread(load_table(spark, "/root/testdata/sf0.001", "documents"))
-    jvm = sorted(map(tuple, minhash_signatures_plan(docs).collect()))
-    arw = sorted(map(tuple, _minhash_signatures_arrow(docs).collect()))
-    assert jvm == arw and len(jvm) > 0
-
-
 def test_propagate_clusters_empty_pair_graph(spark):
     """Regression (r16 review): the Observation-fused loop crashed on
     an empty pair frame — Catalyst's empty-relation propagation

@@ -27,7 +27,7 @@ SHOWCASE = [
     ("l2_minhash_lsh_pairs", "LSH: aggregate-column signatures, hash band join"),
     ("l13_training_pipeline", "filter pushdown -> md5 dedup shuffle -> partial+final rollup"),
     ("o2_topk", "ORDER BY+LIMIT planned as TakeOrderedAndProject"),
-    ("w3_ntile", "global NTILE via _global_rank: range partition + pid-local window, no SinglePartition"),
+    ("w3_ntile", "global NTILE via range_rank: range partition + broadcast driver offsets, no Window or SinglePartition"),
     ("l3b_embedding_neardup", "LSH near-dup: narrow signature self-join + exact verify by id — embeddings stay out of the candidate shuffle"),
     ("l22_dedup_apply", "dedup apply: corpus joins the label table once; text never reshuffled"),
     ("l23_stratified_sample", "stratified sampling: broadcast rates, narrow md5 filter, zero data shuffles"),
@@ -45,7 +45,7 @@ SHOWCASE = [
     ("l35_quality_percentile", "per-source quality percentile: scan-side score, single window exchange, no global sort"),
     ("l36_embedding_outliers", "embedding outliers: (label,dim) centroid agg broadcast back, one vec_id distance agg, tiny stats broadcast"),
     ("l2c_ngram_jaccard", "exact word-3-gram Jaccard: persisted gram frame reused for sizes and both pair-join sides"),
-    ("l35b_quality_percentile_scaled", "distributed ranking: one range shuffle (ReuseExchange feeds both branches), offsets broadcast, (pid,source) window — no per-source task"),
+    ("l35b_quality_percentile_scaled", "distributed ranking (range_rank): one range shuffle into a persisted frame, driver-collected slice offsets broadcast on a null-safe key — no window, no per-source task"),
     ("l37_ngram_lm_contamination", "LM contamination: benchmark LM tables broadcast, corpus bigrams through broadcast left joins, one doc_id partial+final agg"),
     ("x26_nth_from_last", "FROM LAST rewrite: reversed-ordering windows share one hash exchange per partition spec"),
     ("x31_window_exclude_peers", "EXCLUDE GROUP/TIES peer subtraction: frame + RANGE CURRENT..CURRENT peer aggregates in ONE Window operator, one exchange"),
