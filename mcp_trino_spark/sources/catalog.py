@@ -55,7 +55,8 @@ def table_path(sf_dir: str, name: str) -> str:
 #: never reuses RESULTS (every action still scans parquet); the
 #: (mtime_ns, size) fingerprint drops the entry the moment the file
 #: changes on disk, and the WeakKeyDictionary can't alias a collected
-#: session's entry via id() reuse (same pattern as _LAST_REGISTERED).
+#: session's entry via id() reuse (same pattern as execute's
+#: _COLUMN_TYPES_CACHE).
 _TABLE_PLAN_CACHE: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 
 
@@ -203,15 +204,6 @@ def load_tables(spark: SparkSession, sf_dir: str) -> Dict[str, DataFrame]:
     return {t: load_table(spark, sf_dir, t) for t in TABLES if os.path.exists(table_path(sf_dir, t))}
 
 
-#: session → (sf_dir, schema digest) of the last registration, weakref-
-#: keyed so a collected session can't alias a new one's entry via id()
-#: reuse (ADVICE r11).  The digest makes the skip-if-unchanged guard
-#: schema-aware: re-registering the same sf_dir after the parquet
-#: schemas changed ON DISK invalidates the column-type map instead of
-#: silently serving the stale one.
-_LAST_REGISTERED: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
-
-
 def register_tables(spark: SparkSession, sf_dir: str) -> Dict[str, DataFrame]:
     """Register every testdata table as a temp view under its bare name.
 
@@ -222,18 +214,4 @@ def register_tables(spark: SparkSession, sf_dir: str) -> Dict[str, DataFrame]:
     dfs = load_tables(spark, sf_dir)
     for name, df in dfs.items():
         df.createOrReplaceTempView(name)
-    # replacing a view can change its schema without changing the
-    # SHOW TABLES fingerprint — drop the cached column-type map, but
-    # ONLY when the registration actually changes anything: the
-    # harnesses call register_tables once per entry with the same
-    # sf_dir, and re-registering identical schemas must not force a
-    # per-query map rebuild (a measured ~0.2 s tax on every benched
-    # query)
-    digest = tuple(sorted((n, df.schema.simpleString()) for n, df in dfs.items()))
-    key = (sf_dir, digest)
-    if _LAST_REGISTERED.get(spark) != key:
-        _LAST_REGISTERED[spark] = key
-        from mcp_trino_spark.execute import invalidate_column_types_cache
-
-        invalidate_column_types_cache(spark)
     return dfs

@@ -244,10 +244,29 @@ def _error(msg_id, code: int, message: str) -> Dict[str, Any]:
     return {"jsonrpc": "2.0", "id": msg_id, "error": {"code": code, "message": message}}
 
 
+def _status_body() -> Dict[str, Any]:
+    """The /status health body plus process counters of the two warm-
+    session reuses: Spark's generated-class cache (compiles = misses)
+    and the façade's column-type map.  Reads no session, so it never
+    builds one."""
+    from mcp_trino_spark.execute import column_types_counts
+    from mcp_trino_spark.session import codegen_counts
+
+    ct = column_types_counts()
+    return {
+        "status": "ok",
+        "version": "0.1.0",
+        **codegen_counts(),
+        "column_types_hits": ct["hits"],
+        "column_types_misses": ct["misses"],
+    }
+
+
 class _HTTPHandler:
     """StreamableHTTP transport (reference internal/mcp/server.go:71-167):
     POST /mcp (and legacy /sse) carries one JSON-RPC message per request;
-    GET /status is the health probe; CORS headers match the reference.
+    GET /status is the health probe (plus the _status_body counters);
+    CORS headers match the reference.
     Built on stdlib http.server — no SDK in this container.
 
     Auth (reference server.go:170-215 wraps the HTTP transport in OAuth
@@ -490,7 +509,7 @@ class _HTTPHandler:
 
             def do_GET(self):
                 if self.path == "/status":
-                    self._reply(200, b'{"status":"ok","version":"0.1.0"}')
+                    self._reply(200, json.dumps(_status_body()).encode())
                 elif self.path == "/.well-known/oauth-protected-resource" and (
                     oidc_validator is not None or jwt_secret
                 ):

@@ -102,7 +102,11 @@ def test_http_transport(server):
     try:
         base = f"http://localhost:{port}"
         with urllib.request.urlopen(f"{base}/status") as r:
-            assert _json.loads(r.read())["status"] == "ok"
+            body = _json.loads(r.read())
+        assert body["status"] == "ok" and body["version"] == "0.1.0"
+        for key in ("codegen_compiles", "codegen_compile_ms",
+                    "column_types_hits", "column_types_misses"):
+            assert isinstance(body[key], int) and body[key] >= 0, key
 
         def post(path, payload):
             req = urllib.request.Request(

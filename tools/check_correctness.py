@@ -16,11 +16,12 @@ import argparse
 import math
 import sys
 import time
+from pathlib import Path
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from mcp_trino_spark import registry  # noqa: E402
 from mcp_trino_spark.operators.opcache import release_all_operator_caches  # noqa: E402

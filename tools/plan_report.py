@@ -1,7 +1,8 @@
 """Generate PLANS.md: the actual physical plans of the scale-critical
 operators, as evidence for the design claims in SCALE.md.
 
-Usage: python tools/plan_report.py   (writes /root/repo/PLANS.md)
+Usage: python tools/plan_report.py   (writes PLANS.md at the root of
+the checkout the script sits in)
 """
 
 from __future__ import annotations
@@ -9,8 +10,10 @@ from __future__ import annotations
 import contextlib
 import io
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from mcp_trino_spark import registry  # noqa: E402
 from mcp_trino_spark.operators.opcache import release_all_operator_caches  # noqa: E402
@@ -92,7 +95,7 @@ def main() -> None:
         out.append(f"\n## {name}\n\n*{why}*\n\n```\n{tree}\n```\n")
         release_all_operator_caches()
         spark.catalog.clearCache()
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(ROOT / "PLANS.md", "w") as f:
         f.write("\n".join(out))
     print("wrote PLANS.md")
 
